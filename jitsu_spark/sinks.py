@@ -15,17 +15,23 @@ Reference (external Go service `jitsucom/bulker`, invoked from
   (`bulker-destination.ts:340-385`); one physical table per value.
 
 Scale design: tables are laid out as parquet partitioned by `_p_date`
-(UTC date of the event timestamp). An upsert then only rewrites the date
-partitions the incoming batch actually touches — bounded by the dedup
-window — using dynamic partition overwrite, never the whole table. On a
-lakehouse table format this same operation is a `MERGE INTO` whose file
-pruning does the equivalent partition-level rewrite; the API here is
-format-agnostic so swapping the physical layer does not change callers.
+(UTC date of the event timestamp). An upsert is one pass: it lists the
+date partitions within the dedup window of the batch from disk, reads
+only those, deduplicates existing ∪ batch once and writes that plan
+uncached with dynamic partition overwrite, so only the touched
+partitions are rewritten and AQE sizes the write (one file per touched
+date at micro-batch size). A second listing finds the read partitions
+the merge emptied. On a lakehouse table format this same operation is a
+`MERGE INTO` whose file pruning does the equivalent partition-level
+rewrite; the API here is format-agnostic so swapping the physical layer
+does not change callers.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +43,8 @@ PARTITION_COL = "_p_date"
 # without an event name fanned out by the segment layout): quarantined,
 # never silently dropped, never a crash
 UNROUTABLE_TABLE = "_unroutable"
+# directory value Spark writes for a null partition value
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 class WarehouseSink:
@@ -90,6 +98,8 @@ class WarehouseSink:
         primary_key: list[str] | None = None,
         timestamp_col: str = "ts",
         dedup_window_days: int = DEFAULT_DEDUP_WINDOW_DAYS,
+        *,
+        _batch_dates: set | None = None,
     ) -> None:
         """MERGE-by-primary-key within the dedup window.
 
@@ -97,95 +107,76 @@ class WarehouseSink:
         the table outside the touched date partitions are untouched on
         disk. This is the idempotence that turns at-least-once delivery
         into exactly-once results (SURVEY §2.10 W1).
+
+        `_batch_dates` is the batch's `_p_date` set when the caller has
+        already collected it (`write_routed` does, for every table at
+        once); a standalone call collects it here.
         """
         pk = primary_key or DEFAULT_PRIMARY_KEY
         df = self._conform(df, table, timestamp_col)
-        batch = _latest_per_key(df, pk, timestamp_col)
-
-        if not self.exists(table):
-            batch.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(
-                self._path(table)
+        path = self._path(table)
+        before: dict[str, set[str]] = {}
+        if self.exists(table):
+            if _batch_dates is None:
+                _batch_dates = {
+                    r[0] for r in df.select(PARTITION_COL).distinct().collect()
+                }
+            # Only date partitions within the dedup window of the batch's
+            # own span can hold a conflicting primary key. The window
+            # extends BOTH directions: backward for the usual newer-batch-
+            # vs-older-row merge, and forward because an out-of-order
+            # redelivery dated BEFORE an existing same-key row must still
+            # find it (round-9 spine review finding #2;
+            # `sinks_cloud.merge_window_bounds` mirrors the same bounds).
+            # The null partition (null event timestamps) is always read.
+            dates = [d for d in _batch_dates if d is not None]
+            window = dt.timedelta(days=dedup_window_days)
+            lo, hi = (min(dates) - window, max(dates) + window) if dates else (None, None)
+            pred = F.col(PARTITION_COL).isNull()
+            if dates:
+                pred = pred | F.col(PARTITION_COL).between(F.lit(lo), F.lit(hi))
+            # The same partitions and their part files, listed from disk
+            # (this local/posix layout; an HDFS deployment lists them
+            # through FileSystem). A date partition is named by its ISO
+            # date, which orders as a string.
+            for name in os.listdir(path):
+                col, _, value = name.partition("=")
+                if col == PARTITION_COL and (
+                    value == NULL_PARTITION or (dates and str(lo) <= value <= str(hi))
+                ):
+                    before[name] = set(os.listdir(os.path.join(path, name)))
+        if before:
+            df = self.read(table).where(pred).unionByName(
+                df, allowMissingColumns=not self.schema_freeze
             )
-            return
-
-        # Only date partitions within the dedup window of the batch's own
-        # span can contain a conflicting primary key — read just those.
-        # The window extends BOTH directions: backward for the usual
-        # newer-batch-vs-older-row merge, and forward because an
-        # out-of-order redelivery dated BEFORE an existing same-key row
-        # must still find it (newest-wins keeps the existing row and the
-        # stale batch row is not written) — a backward-only read let the
-        # older duplicate land in its own partition (round-9 spine
-        # review finding #2; `sinks_cloud.merge_window_bounds` mirrors
-        # the same symmetric bounds for the MERGE families). Null event
-        # timestamps land in the null partition, which is always read —
-        # a None among the collected dates crashed min()/max() before
-        # (finding #6).
-        dates = [
-            r[0]
-            for r in batch.select(PARTITION_COL).distinct().collect()
-        ]
-        nn_dates = [d for d in dates if d is not None]
-        window = F.expr(f"INTERVAL {dedup_window_days} DAYS")
-        if nn_dates:
-            lo = F.lit(min(nn_dates)).cast("date") - window
-            hi = F.lit(max(nn_dates)).cast("date") + window
-            pred = F.col(PARTITION_COL).between(lo, hi)
-        else:
-            pred = F.lit(False)
-        if len(nn_dates) < len(dates):  # batch has null-date rows
-            pred = pred | F.col(PARTITION_COL).isNull()
-        existing = self.read(table).where(pred)
-
-        existing_dates = {
-            r[0] for r in existing.select(PARTITION_COL).distinct().collect()
-        }
-        merged = _latest_per_key(
-            existing.unionByName(batch, allowMissingColumns=not self.schema_freeze),
-            pk,
-            timestamp_col,
-        ).cache()
-        try:
-            # Collect the surviving date set BEFORE the write: `merged`'s
-            # lineage reads the table's current files, and any
-            # recomputation after the dynamic overwrite would re-scan
-            # files the write just replaced (FILE_NOT_EXIST). The collect
-            # also fully materializes the cache the write then reuses.
-            merged_dates = {
-                r[0] for r in merged.select(PARTITION_COL).distinct().collect()
-            }
-            # Dynamic overwrite replaces exactly the partitions present in
-            # `merged`; everything else on disk stays as-is.
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(PARTITION_COL)
-                .parquet(self._path(table))
-            )
-        finally:
-            merged.unpersist()
-        # A key whose NEWER row lands in a different date partition
-        # leaves its old partition without any surviving row — dynamic
-        # overwrite never touches a partition absent from `merged`, so
-        # the stale duplicate would survive on disk (round-4 twin
-        # finding: the warehouse MERGE updates in place, the parquet
-        # path must match). Drop partitions inside the window that the
-        # merge emptied. (Directory removal = this local/posix layout;
-        # an HDFS deployment issues the same delete via FileSystem.)
-        import shutil
-
-        for d in existing_dates - merged_dates:
-            # a null partition value is stored under the Hive default
-            # directory name, not "None"
-            name = "__HIVE_DEFAULT_PARTITION__" if d is None else str(d)
-            shutil.rmtree(
-                os.path.join(self._path(table), f"{PARTITION_COL}={name}"),
-                ignore_errors=True,
-            )
+        # One dedup over existing ∪ batch, written uncached straight to the
+        # table: its scan runs inside the write job, before the commit
+        # swaps the partitions, and AQE sizes the shuffle (one task and one
+        # file per touched date at micro-batch size). Dynamic overwrite
+        # replaces exactly the date partitions the merge produced; with
+        # nothing read it only adds the batch's new partitions.
+        (
+            _latest_per_key(df, pk, timestamp_col)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(PARTITION_COL)
+            .parquet(path)
+        )
+        # A key whose NEWER row lands in a different date partition leaves
+        # its old partition without any surviving row, and dynamic
+        # overwrite never touches a partition absent from the merge, so the
+        # stale duplicate would survive on disk (round-4 twin finding: the
+        # warehouse MERGE updates in place, the parquet path must match).
+        # A rewritten partition holds new part files; a read partition
+        # whose file list did not change was emptied by the merge.
+        for name, files in before.items():
+            part = os.path.join(path, name)
+            if set(os.listdir(part)) == files:
+                shutil.rmtree(part, ignore_errors=True)
         # overwrite + deletion invalidate any cached file listing for
         # this table path — refresh so subsequent reads in the same
         # session never chase replaced part files
-        self.spark.catalog.refreshByPath(self._path(table))
+        self.spark.catalog.refreshByPath(path)
 
     # -- multi-table routing (bulker-destination.ts:340-385) -----------
 
@@ -199,35 +190,28 @@ class WarehouseSink:
     ) -> list[str]:
         """Route one layouted batch into its per-table destinations.
 
-        The distinct table list is tiny (bounded by event-name
-        cardinality); per-table writes reuse the cached routed batch, so
-        the source is scanned once.
+        One distinct (table, date) collect over the cached routed batch
+        gives both the table list (bounded by event-name cardinality) and
+        each table's date set for its MERGE window; per-table writes
+        reuse the cache, so the source is scanned once.
         """
-        df = df.cache()
+        df = df.withColumn(PARTITION_COL, F.to_date(F.col(timestamp_col))).cache()
         try:
-            routed = [
-                r[0] for r in df.select(table_col).distinct().collect()
-            ]
-            # a null routing value is unroutable, not a crash: `== None`
-            # matches no rows (so the rows silently vanished) and
-            # upsert(None) died in os.path.join (round-9 spine review
-            # finding #7). Null-routed rows go to the quarantine table
-            # so nothing is silently lost and the batch completes.
-            tables = [t for t in routed if t is not None]
-            for t in tables:
-                part = df.where(F.col(table_col) == t).drop(table_col)
+            dates: dict[str | None, set] = {}
+            for t, d in df.select(table_col, PARTITION_COL).distinct().collect():
+                dates.setdefault(t, set()).add(d)
+            tables = []
+            # a null routing value is unroutable, not a crash (round-9
+            # spine review finding #7): its rows go to the quarantine
+            # table, so nothing is silently lost and the batch completes.
+            for t in dates:
+                part = df.where(F.col(table_col).eqNullSafe(t)).drop(table_col)
+                name = UNROUTABLE_TABLE if t is None else t
                 if deduplicate:
-                    self.upsert(part, t, primary_key, timestamp_col)
+                    self.upsert(part, name, primary_key, timestamp_col, _batch_dates=dates[t])
                 else:
-                    self.append(part, t, timestamp_col)
-            if len(tables) < len(routed):
-                q = UNROUTABLE_TABLE
-                part = df.where(F.col(table_col).isNull()).drop(table_col)
-                if deduplicate:
-                    self.upsert(part, q, primary_key, timestamp_col)
-                else:
-                    self.append(part, q, timestamp_col)
-                tables.append(q)
+                    self.append(part, name, timestamp_col)
+                tables.append(name)
             return tables
         finally:
             df.unpersist()
@@ -283,9 +267,11 @@ class WarehouseSink:
 def _latest_per_key(df: DataFrame, pk: list[str], timestamp_col: str) -> DataFrame:
     """One row per primary key, newest timestamp wins.
 
-    max_by over a struct of all columns keeps this a hash aggregate
-    (partial-agg friendly, single shuffle on the key) instead of a window
-    sort — the shape that survives skewed keys at scale with AQE.
+    max_by over a struct of all columns is a partial-agg friendly
+    aggregate with a single shuffle on the key, not a window over the
+    sorted partition. Its struct buffer is not fixed-width, so Spark
+    plans it as a SortAggregate (a Sort on each side of the shuffle),
+    not a hash aggregate.
     """
     others = [c for c in df.columns if c not in pk]
     # DataFrame API, not an interpolated SQL string: a column named with

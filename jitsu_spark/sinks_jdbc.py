@@ -9,7 +9,7 @@ that against SQL warehouses as load-into-temp-table + MERGE; the same
 shape here:
 
 1. the batch is reduced to one row per key (max_by on the timestamp — a
-   partial-agg-friendly hash aggregate, same helper the parquet sink uses),
+   partial-agg-friendly aggregate, same helper the parquet sink uses),
 2. written to `<table>__stage` via the parallel JDBC writer (each Spark
    partition holds one connection — executor-side, nothing driver-routed),
 3. one `MERGE INTO ... WHEN MATCHED AND stage.ts >= target.ts` statement
@@ -246,6 +246,15 @@ class JdbcWarehouseSink:
         df = df.cache()
         try:
             tables = [r[0] for r in df.select(table_col).distinct().collect()]
+            if None in tables:
+                # refuse the batch before any write: `_unroutable` (the
+                # parquet sink's quarantine) is not a valid unquoted Derby
+                # identifier, and upsert(None) would fail mid fan-out
+                n = df.where(F.col(table_col).isNull()).count()
+                raise ValueError(
+                    f"{n} row(s) have a null routing column {table_col!r}; "
+                    "the JDBC warehouse has no quarantine table"
+                )
             for t in tables:
                 part = df.where(F.col(table_col) == t).drop(table_col)
                 if deduplicate:

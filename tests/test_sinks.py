@@ -294,3 +294,52 @@ def test_compact_honors_target_file_count(spark, tmp_path):
     n = len(glob.glob(part_dir + "/*.parquet"))
     assert 1 < n <= 4, n
     assert sink.read("ev").count() == 400
+
+
+def test_upsert_reads_null_partition_for_dated_batch(spark, sink):
+    """The null partition is part of every MERGE window: a key first seen
+    with a null timestamp and then redelivered with a real one must end
+    up once, in the dated partition."""
+    import os
+
+    sink.upsert(_df(spark, [("m1", None, "null-ts")]), "np")
+    sink.upsert(_df(spark, [("m1", _ts("2024-03-02T00:00:00"), "dated")]), "np")
+    rows = [(r.message_id, r.v) for r in sink.read("np").collect()]
+    assert rows == [("m1", "dated")]
+    assert not os.path.isdir(
+        os.path.join(sink.base_dir, "np", "_p_date=__HIVE_DEFAULT_PARTITION__")
+    )
+
+
+def test_write_routed_merge_writes_one_file_per_date(spark, sink):
+    """The MERGE is one uncached read-merge-write that AQE sizes: every
+    date partition a batch touches is rewritten as a single part file, and
+    no key is stored twice, including a late row landing in an older date."""
+    import glob
+    import os
+    from collections import Counter
+
+    tables = ["tracks", "pages", "identifies"]
+
+    def batch(lo, n, day, late=()):
+        rows = [
+            (f"m{i}", _ts(f"2024-03-{day:02d}T{i % 24:02d}:00:00"), tables[i % 3])
+            for i in range(lo, lo + n)
+        ]
+        return spark.createDataFrame(
+            rows + list(late), "message_id string, ts timestamp, _table string"
+        ).repartition(8)
+
+    sink.write_routed(batch(0, 60, 1))  # the three tables exist
+    sink.write_routed(batch(30, 60, 2))  # m30..m59 redelivered a day later
+    # a late new key lands in the existing 03-01 partition of `tracks`
+    sink.write_routed(batch(90, 60, 3, [("late", _ts("2024-03-01T23:00:00"), "tracks")]))
+    for t in tables:
+        parts = glob.glob(os.path.join(sink.base_dir, t, "_p_date=*"))
+        assert len(parts) == 3, parts
+        for p in parts:
+            assert len(glob.glob(os.path.join(p, "*.parquet"))) == 1, p
+        ids = Counter(r.message_id for r in sink.read(t).collect())
+        assert max(ids.values()) == 1, t
+    got = {r.message_id for t in tables for r in sink.read(t).collect()}
+    assert got == {f"m{i}" for i in range(150)} | {"late"}

@@ -132,3 +132,17 @@ def test_catalog_dispatch(spark, tmp_path):
         spark, {"destinationType": "s3", "directory": str(tmp_path / "lake")}
     )
     assert isinstance(lake, WarehouseSink)
+
+
+def test_routed_write_rejects_null_route_before_writing(spark, sink):
+    """A null routing value has no JDBC quarantine table (`_unroutable` is
+    not a valid unquoted Derby identifier): the batch is refused before
+    any table is written."""
+    df = spark.createDataFrame(
+        [("m1", T0, "tracks"), ("m2", T0, None), ("m3", T0, "pages")],
+        "message_id string, ts timestamp, _table string",
+    )
+    with pytest.raises(ValueError, match=r"1 row.*'_table'"):
+        sink.write_routed(df)
+    assert not sink.exists("tracks")
+    assert not sink.exists("pages")

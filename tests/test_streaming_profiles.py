@@ -17,13 +17,13 @@ from jitsu_spark.operators.profiles import (
     default_profile_fn,
 )
 from jitsu_spark.streaming.profiles_tick import (
+    LiveProfileTicker,
+    read_profiles_store,
+)
 
 # r13: long end-to-end file — excluded from the default pytest profile
 # (pytest.ini addopts -m "not slow"); run with -m slow / -m "slow or not slow".
 pytestmark = pytest.mark.slow
-    LiveProfileTicker,
-    read_profiles_store,
-)
 
 
 def _events(spark, rows):
