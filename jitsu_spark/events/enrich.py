@@ -74,12 +74,6 @@ def insert_id(message_id: Column, etype: Column) -> Column:
     return F.md5(F.concat_ws("_", message_id, etype))
 
 
-def device_id_fallback(ip: Column, user_agent: Column) -> Column:
-    """F11 — sha256 device-id fallback from ip+UA
-    (`mixpanel-destination.ts:467-494`)."""
-    return F.sha2(F.concat_ws("|", ip, user_agent), 256)
-
-
 def traits_merge(event_traits: Column, context_traits: Column) -> Column:
     """F10 — `{...event.traits, ...context.traits}` precedence merge over
     MAP columns (`lib/index.ts:227-229`); map_concat with right precedence

@@ -21,14 +21,6 @@ def snake_case(name: str) -> str:
     return out.replace(" ", "_").lower()
 
 
-# Same rule as a Spark SQL expression (for transform_keys over MAP bags —
-# stays JVM-side; Java regex supports the lookbehind).
-def snake_case_sql(col: str) -> str:
-    return (
-        f"lower(replace(regexp_replace({col}, '(?<=[a-zA-Z])([A-Z])', '_$1'), ' ', '_'))"
-    )
-
-
 def snake_case_tree(value):
     """Recursive key rewrite over parsed JSON (dicts/lists/scalars)."""
     if isinstance(value, dict):

@@ -61,7 +61,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 from .sampling import _bucket, _bucket_duck
 
 M_BITS = 1 << 17  # bloom width in bits (16 KiB summary)
@@ -137,7 +136,7 @@ def bloom_probe(
     batch's own key, which partial-aggregates back to one row per input
     row before moving."""
     probed = _position_rows(batch_hashes, col, m_bits, k_hash).join(
-        maybe_broadcast(words), "word_idx", "left"
+        words, "word_idx", "left"
     )
     keys = [c for c in batch_hashes.columns]
     return (
@@ -188,7 +187,7 @@ def bloom_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         probed.where("bloom_candidate").select("text_hash").distinct()
     )
     hits = (
-        store.join(maybe_broadcast(candidates), "text_hash")
+        store.join(candidates, "text_hash")
         .groupBy("text_hash")
         .agg(F.min("canonical_id").alias("canonical_id"))
     )
@@ -196,8 +195,8 @@ def bloom_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("batch_canonical")
     )
     return (
-        probed.join(maybe_broadcast(batch_canon), "text_hash")
-        .join(maybe_broadcast(hits), "text_hash", "left")
+        probed.join(batch_canon, "text_hash")
+        .join(hits, "text_hash", "left")
         .selectExpr(
             "doc_id",
             "text_hash",
@@ -481,7 +480,7 @@ def fingerprint_verdicts_bloom(
     # broadcast build side carries candidates only, and a bucketed
     # store layout prunes files by the candidates' hash prefixes.
     cand = probed.where("bloom_candidate").select("doc_id")
-    cand_docs = new_docs.join(maybe_broadcast(cand), "doc_id", "left_semi")
+    cand_docs = new_docs.join(cand, "doc_id", "left_semi")
     confirmed = verdicts_against_store(cand_docs, store).select(
         "text_hash", "canonical_id", "verdict"
     ).where(F.col("verdict") == "dup_of_corpus").select(
@@ -491,8 +490,8 @@ def fingerprint_verdicts_bloom(
         F.min("doc_id").alias("batch_canonical")
     )
     out = (
-        batch.join(maybe_broadcast(batch_canon), "text_hash")
-        .join(maybe_broadcast(confirmed), "text_hash", "left")
+        batch.join(batch_canon, "text_hash")
+        .join(confirmed, "text_hash", "left")
         .selectExpr(
             "doc_id",
             "text_hash",
@@ -525,14 +524,6 @@ def band_bloom_keys(sig: DataFrame) -> DataFrame:
     return _band_rows(sig).selectExpr(
         "md5(concat_ws(':', band_idx, bucket)) AS band_key"
     )
-
-
-def append_band_bloom(
-    spark: SparkSession, sig: DataFrame, bloom_dir: str
-) -> None:
-    """Pre-warm the band summary with a signature frame's keys (same
-    optional-but-always-safe contract as `append_bloom`)."""
-    append_bloom(spark, band_bloom_keys(sig), bloom_dir, col="band_key")
 
 
 def near_store_may_collide(

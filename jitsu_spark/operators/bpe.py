@@ -484,7 +484,7 @@ _WC_MEMO_CAP = 16
 
 
 def _wc_memo(df: DataFrame, build):
-    from ..plans.hints import plan_fingerprint
+    from ..plans.store_memo import plan_fingerprint
 
     fp = plan_fingerprint(df)
     if fp is not None and fp in _WC_MEMO:

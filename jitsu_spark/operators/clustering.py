@@ -38,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..tables import load_table
 from .similarity import (
     _COSINE_SCORE,
@@ -64,7 +63,7 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     (`similarity._argbest_expr` — the same single-sourced argmax the IVF
     paths use) — the corpus never shuffles and nothing sorts."""
     return (
-        emb.join(maybe_broadcast(_packed_centroids(centroids)))
+        emb.join(_packed_centroids(centroids))
         .withColumn("best", F.expr(_argbest_expr(_COSINE_SCORE)))
         # drop the empty-codebook init sentinel (cid=-1, score=-Inf) —
         # matches the inner-join semantics of the windowed form
@@ -198,7 +197,7 @@ def _proto_ranked(assigned: DataFrame) -> DataFrame:
     return (
         banded.withColumn("local_rank", F.row_number().over(wl))
         .join(
-            maybe_broadcast(offs),
+            offs,
             (F.col("cluster_id") == F.col("o_cluster"))
             & (F.col("pband") == F.col("o_band")),
         )
@@ -269,7 +268,7 @@ def _quota_pick(df: DataFrame) -> DataFrame:
     wq = Window.partitionBy("cluster_id", "bucket").orderBy(F.asc("vec_id"))
     return (
         bucketed.join(
-            maybe_broadcast(offs),
+            offs,
             (F.col("cluster_id") == F.col("o_cluster"))
             & (F.col("bucket") == F.col("o_bucket")),
         )

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 from .sampling import _bucket, _bucket_duck
 from .text_ops import TOKENS, TOKENS_DUCK, _SW
 
@@ -224,7 +223,6 @@ def incremental_corpus(
     retained ∪ batch, retained canonical preferred, else min batch
     doc_id — the first-seen-wins semantics every incremental dedup store
     implements."""
-    from ..plans.hints import maybe_broadcast
     from .dedup import verdicts_against_store
     from .sampling import _bucket, token_budget_over
     from .text_ops import TOKENS
@@ -257,7 +255,7 @@ def incremental_corpus(
         .withColumn("rn", F.row_number().over(w))
         .where("rn = 1")
         .drop("rn")
-        .join(maybe_broadcast(affected), "doc_id", "left_anti")
+        .join(affected, "doc_id", "left_anti")
     )
     retained = retained_h.drop("h")
     batch_ids = diff.where(
@@ -267,7 +265,7 @@ def incremental_corpus(
     # and referenced four times across the verdict join and the merge —
     # same bounded-checkpoint rationale as the diff
     batch = new.join(
-        maybe_broadcast(batch_ids), "doc_id", "left_semi"
+        batch_ids, "doc_id", "left_semi"
     ).localCheckpoint(eager=True)
     # retained docs are canonical-per-hash, so this store is hash-unique;
     # the hash rides from the election window (no second md5 pass)
@@ -276,9 +274,7 @@ def incremental_corpus(
     )
     verdicts = verdicts_against_store(batch, store)
     ingested = batch.join(
-        maybe_broadcast(
-            verdicts.where(F.col("verdict") == "new").select("doc_id")
-        ),
+        verdicts.where(F.col("verdict") == "new").select("doc_id"),
         "doc_id",
         "left_semi",
     )
@@ -458,7 +454,6 @@ def corpus_dedup_suite(
 def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, lang, n_docs, total_tokens, avg_tokens, n_exact_dup,
     dup_rate, n_quality_keep, keep_rate)."""
-    from ..plans.hints import maybe_broadcast
     from .quality_filters import gopher_quality_flags
 
     docs = load_table(spark, sf_dir, "documents")
@@ -471,7 +466,7 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dupc = base.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
     keep = gopher_quality_flags(spark, sf_dir).select("doc_id", "keep")
-    j = base.join(maybe_broadcast(dupc), "h").join(keep, "doc_id")
+    j = base.join(dupc, "h").join(keep, "doc_id")
     return (
         j.groupBy("source", "lang")
         .agg(
@@ -632,7 +627,7 @@ def snapshot_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_buckets"),
     )
     return (
-        counts.join(maybe_broadcast(totals), "dim")
+        counts.join(totals, "dim")
         .selectExpr(
             "dim",
             "bucket",

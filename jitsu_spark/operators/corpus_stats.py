@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from .dedup import _SHINGLE_ROWS_DUCK, _shingle_rows
 
 BOILERPLATE_MIN_DF = 3  # a shingle in >= this many docs is boilerplate
@@ -53,7 +52,7 @@ def boilerplate_shingle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s")
     )
     flagged = sh.join(
-        maybe_broadcast(hot.withColumn("_hot", F.lit(1))), "s", "left"
+        hot.withColumn("_hot", F.lit(1)), "s", "left"
     )
     return (
         flagged.groupBy("doc_id")
@@ -158,7 +157,7 @@ def duplicate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("df") >= 2)
         .select("g")
     )
-    dup_pos = grams.join(maybe_broadcast(shared), "g").select(
+    dup_pos = grams.join(shared, "g").select(
         "doc_id", "n_tokens", "pos"
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -272,7 +271,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: token explode -> one count aggregate (partial-agg friendly)
     -> one join back on token (the frequency table is vocabulary-sized,
-    size-gated broadcast) -> per-doc average. Corpus text shuffles only
+    broadcast while it fits) -> per-doc average. Corpus text shuffles only
     as (token) pairs."""
     docs = load_table_docs(spark, sf_dir)
     toks = docs.selectExpr("doc_id", "explode(toks) AS tok")
@@ -283,7 +282,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for one scalar
     total = toks.agg(F.count(F.lit(1)).cast("double").alias("n_total"))
     scored = (
-        toks.join(maybe_broadcast(freq), "tok")
+        toks.join(freq, "tok")
         .crossJoin(F.broadcast(total))
         .select("doc_id", (-F.log(F.col("cnt") / F.col("n_total"))).alias("s"))
     )
@@ -303,8 +302,8 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is scored with its mean bigram negative log-likelihood.
 #
 # Scale: one bigram explode; the model tables (bigram counts, context
-# counts, vocab size) are vocabulary-sized — Zipf-bounded, size-gated
-# broadcast exactly like unigram_surprisal's frequency table (beyond
+# counts, vocab size) are vocabulary-sized — Zipf-bounded, broadcast
+# exactly like unigram_surprisal's frequency table (beyond
 # broadcast they degrade to token-keyed shuffles, still never text).
 # Scoring is the join of the corpus bigrams against those tables plus
 # one per-doc average. Zero Python.
@@ -350,8 +349,8 @@ def bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = c2.agg(F.countDistinct("w2").cast("double").alias("v"))
     k = LM_ADD_K
     scored = (
-        bg.join(maybe_broadcast(c2), ["w1", "w2"], "left")
-        .join(maybe_broadcast(c1), ["w1"], "left")
+        bg.join(c2, ["w1", "w2"], "left")
+        .join(c1, ["w1"], "left")
         .crossJoin(F.broadcast(vocab))
         .select(
             "doc_id",
@@ -493,7 +492,7 @@ def remove_duplicate_spans(
     # when p' - p <= k (their covered ranges overlap or touch)
     w = Window.partitionBy("doc_id").orderBy("pos")
     hits = (
-        grams.join(maybe_broadcast(dup), "g")
+        grams.join(dup, "g")
         .where(F.col("doc_id") != F.col("canon"))
         .select("doc_id", "pos")
     )
@@ -521,7 +520,7 @@ def remove_duplicate_spans(
         .agg(F.collect_list(F.struct("s", "e")).alias("iv"))
     )
     return (
-        docs.join(maybe_broadcast(rm), "doc_id", "left")
+        docs.join(rm, "doc_id", "left")
         .selectExpr(
             "doc_id",
             "size(toks) AS n_tokens",
@@ -797,8 +796,8 @@ def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     u1 = uni.selectExpr("w AS w1", "cnt AS c1")
     u2 = uni.selectExpr("w AS w2", "cnt AS c2")
     scored = (
-        bi.join(maybe_broadcast(u1), "w1")
-        .join(maybe_broadcast(u2), "w2")
+        bi.join(u1, "w1")
+        .join(u2, "w2")
         .crossJoin(F.broadcast(n_bi))
         .crossJoin(F.broadcast(tot))
         .selectExpr(
@@ -877,7 +876,7 @@ SELECT rank, w1, w2, pair_cnt, pmi FROM (
 # distinct train bigram types, V = train vocabulary, and k = 0.5 add-k
 # over the continuation distribution so held-out OOV tokens (the +1
 # type) keep nonzero mass. Scale: same shape as bigram_lm_nll — one
-# bigram explode, vocabulary-sized model tables (size-gated broadcast),
+# bigram explode, vocabulary-sized model tables (broadcast while they fit),
 # one join-back pass, zero Python.
 
 KN_DISCOUNT = 0.75
@@ -918,9 +917,9 @@ def kneser_ney_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     d, k = KN_DISCOUNT, LM_ADD_K
     pc = f"(coalesce(n1p_bwd, 0) + {k}) / (t + {k} * (v + 1))"
     scored = (
-        bg.join(maybe_broadcast(types), ["w1", "w2"], "left")
-        .join(maybe_broadcast(ctx), ["w1"], "left")
-        .join(maybe_broadcast(cont), ["w2"], "left")
+        bg.join(types, ["w1", "w2"], "left")
+        .join(ctx, ["w1"], "left")
+        .join(cont, ["w2"], "left")
         .crossJoin(F.broadcast(totals))
         .selectExpr(
             "doc_id",
@@ -996,8 +995,8 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = toks.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     n = toks.agg(F.count(F.lit(1)).cast("double").alias("n"))
     return (
-        sw.join(maybe_broadcast(w), "tok")
-        .join(maybe_broadcast(s), "source")
+        sw.join(w, "tok")
+        .join(s, "source")
         .crossJoin(F.broadcast(n))
         .selectExpr(
             "source",

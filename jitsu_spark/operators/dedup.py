@@ -320,12 +320,11 @@ def _pair_shingle_counts(
 
     The skew guard: shingles whose document frequency exceeds
     `max_doc_frequency` are dropped from the JOIN side only (the hot set is
-    aggregated first — expected tiny — and anti-joined out with a size-gated
-    broadcast). Per-doc cardinalities still count every shingle, so when the
-    cap is a no-op the result is exact, and when it engages the denominators
-    stay true while only the quadratic hot-shingle fan-out is bounded."""
-    from ..plans.hints import maybe_broadcast
-
+    aggregated first — expected tiny — and anti-joined out by broadcast
+    while it stays small). Per-doc cardinalities still count every
+    shingle, so when the cap is a no-op the result is exact, and when it
+    engages the denominators stay true while only the quadratic
+    hot-shingle fan-out is bounded."""
     cap = (
         MAX_SHINGLE_DF_DEFAULT
         if max_doc_frequency is None
@@ -352,7 +351,7 @@ def _pair_shingle_counts(
             .where(F.col("df") > cap)
             .select("shingle")
         )
-        sh_capped = shw.join(maybe_broadcast(hot), "shingle", "left_anti")
+        sh_capped = shw.join(hot, "shingle", "left_anti")
     a, b = sh_capped.alias("a"), sh_capped.alias("b")
     shared = (
         a.join(
@@ -690,7 +689,6 @@ def simhash_hamming_pairs(
         )
         .where((F.col("hamming") > 0) & (F.col("hamming") <= max_hamming))
     )
-    from ..plans.hints import maybe_broadcast
 
     # hamming-0: all intra-group document pairs of one fingerprint
     same = (
@@ -710,7 +708,7 @@ def simhash_hamming_pairs(
     cross = (
         fp.alias("x")
         .join(
-            maybe_broadcast(print_pairs),
+            print_pairs,
             F.col("x.simhash") == F.col("sim_a"),
         )
         .join(fp.alias("y"), F.col("y.simhash") == F.col("sim_b"))
@@ -799,10 +797,9 @@ def near_dup_clusters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = labeled.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
-    from ..plans.hints import maybe_broadcast
 
     return (
-        labeled.join(maybe_broadcast(sizes), "cluster_id")
+        labeled.join(sizes, "cluster_id")
         .selectExpr(
             "doc_id",
             "cluster_id",
@@ -1003,18 +1000,16 @@ def dedup_keep_list(
     """The shipped dedup decision: every document tagged keep/drop with
     its reason — 'singleton' (no near-dup cluster), 'canonical' (cluster
     representative), or 'near_dup' (dropped member). Left joins the
-    near-dup clusters (small side, size-gated broadcast) onto the corpus;
+    near-dup clusters (the small side, which Spark broadcasts) onto the corpus;
     at scale the corpus never shuffles for this decision.
 
     Pass `clusters` (from `load_cluster_map`) to reuse a materialized
     map instead of recomputing the shingle/LSH/components pass."""
-    from ..plans.hints import maybe_broadcast
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     if clusters is None:
         clusters = near_dup_clusters(spark, sf_dir)
     return (
-        docs.join(maybe_broadcast(clusters), "doc_id", "left")
+        docs.join(clusters, "doc_id", "left")
         .selectExpr(
             "doc_id",
             "source",
@@ -1085,8 +1080,6 @@ def fingerprint_verdicts(
     themselves small enough to broadcast into the verdict join. A
     left-outer with the batch preserved can't broadcast its own left
     side, which is why the lookup is split out."""
-    from ..plans.hints import maybe_broadcast
-
     try:
         store = spark.read.parquet(store_dir).select(
             "text_hash", "canonical_id"
@@ -1111,15 +1104,13 @@ def verdicts_against_store(new_docs: DataFrame, store: DataFrame) -> DataFrame:
     or an in-plan hash set (the composed incremental pipeline derives
     one from the retained corpus). Pure plan, no checkpoint: callers
     that mutate the store afterwards pin the lineage themselves."""
-    from ..plans.hints import maybe_broadcast
-
     batch = new_docs.select("doc_id", F.md5("text").alias("text_hash"))
     batch_canon = batch.groupBy("text_hash").agg(
         F.min("doc_id").alias("batch_canonical")
     )
     hits = (
         store.join(
-            maybe_broadcast(batch.select("text_hash").distinct()), "text_hash"
+            batch.select("text_hash").distinct(), "text_hash"
         )
         # concurrent appenders can race the same hash into the store
         # twice (append is not transactional); collapse to one canonical
@@ -1128,8 +1119,8 @@ def verdicts_against_store(new_docs: DataFrame, store: DataFrame) -> DataFrame:
         .agg(F.min("canonical_id").alias("canonical_id"))
     )
     return (
-        batch.join(maybe_broadcast(batch_canon), "text_hash")
-        .join(maybe_broadcast(hits), "text_hash", "left")
+        batch.join(batch_canon, "text_hash")
+        .join(hits, "text_hash", "left")
         .selectExpr(
             "doc_id",
             "text_hash",
@@ -1193,16 +1184,14 @@ def append_signatures(
     the exact store). Pass `sig` (a signature frame covering the
     verdicts' docs) to reuse an already-computed batch signature pass
     instead of re-running shingle+minhash."""
-    from ..plans.hints import maybe_broadcast
-
     fresh_ids = verdicts.where(F.col("verdict") == "new").select("doc_id")
     if sig is None:
         fresh = new_docs.join(
-            maybe_broadcast(fresh_ids), "doc_id", "left_semi"
+            fresh_ids, "doc_id", "left_semi"
         )
         sig = _signatures_from_shingles(_shingles_of(fresh))
     else:
-        sig = sig.join(maybe_broadcast(fresh_ids), "doc_id", "left_semi")
+        sig = sig.join(fresh_ids, "doc_id", "left_semi")
     sig.write.mode("append").parquet(store_dir)
 
 
@@ -1225,8 +1214,6 @@ def near_dup_verdicts_against_store(
     with nulls. Pass `new_sig` to reuse an already-computed batch
     signature frame (the bloom-probing gate computes it once and
     shares it across probe, verdicts, and store append)."""
-    from ..plans.hints import maybe_broadcast
-
     if new_sig is None:
         new_sig = _signatures_from_shingles(_shingles_of(new_docs))
     new_bands = _band_rows(new_sig).withColumnRenamed("doc_id", "new_id")
@@ -1234,11 +1221,11 @@ def near_dup_verdicts_against_store(
         "doc_id", "store_id"
     )
     hits = store_bands.join(
-        maybe_broadcast(new_bands.select("band_idx", "bucket").distinct()),
+        new_bands.select("band_idx", "bucket").distinct(),
         ["band_idx", "bucket"],
     )
     cand = (
-        hits.join(maybe_broadcast(new_bands), ["band_idx", "bucket"])
+        hits.join(new_bands, ["band_idx", "bucket"])
         .select("new_id", "store_id")
         .distinct()
     )
@@ -1258,11 +1245,9 @@ def near_dup_verdicts_against_store(
     )
     est = (
         store_sig.selectExpr("doc_id AS store_id", *s_cols)
-        .join(maybe_broadcast(cand), "store_id")
+        .join(cand, "store_id")
         .join(
-            maybe_broadcast(
-                new_sig.selectExpr("doc_id AS new_id", *n_cols)
-            ),
+            new_sig.selectExpr("doc_id AS new_id", *n_cols),
             "new_id",
         )
         .selectExpr("new_id", "store_id", f"{est_expr} AS est")
@@ -1277,7 +1262,7 @@ def near_dup_verdicts_against_store(
     return (
         new_sig.select("doc_id")
         .join(
-            maybe_broadcast(best.withColumnRenamed("new_id", "doc_id")),
+            best.withColumnRenamed("new_id", "doc_id"),
             "doc_id",
             "left",
         )
@@ -1443,7 +1428,6 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage, stage_order, n_docs, n_tokens, doc_pct, token_pct):
     corpus mass surviving each dedup stage, percentages against the raw
     corpus."""
-    from ..plans.hints import maybe_broadcast
     from ..plans.topk import persist_bounded
 
     # The stage keep-sets each feed the flag joins below — persist them
@@ -1485,12 +1469,10 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     cont_kept = persist_bounded(
-        exact_kept.join(maybe_broadcast(cont_dropped), "doc_id", "left_anti")
+        exact_kept.join(cont_dropped, "doc_id", "left_anti")
     )
     near_kept = cont_kept.join(
-        maybe_broadcast(
-            dedup_keep_list(spark, sf_dir).where("is_kept").select("doc_id")
-        ),
+        dedup_keep_list(spark, sf_dir).where("is_kept").select("doc_id"),
         "doc_id",
         "left_semi",
     )
@@ -1506,17 +1488,17 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of gating five sequential aggregate stages.
     flagged = (
         docs.join(
-            maybe_broadcast(exact_kept.withColumn("_e", F.lit(1))),
+            exact_kept.withColumn("_e", F.lit(1)),
             "doc_id",
             "left",
         )
         .join(
-            maybe_broadcast(cont_kept.withColumn("_c", F.lit(1))),
+            cont_kept.withColumn("_c", F.lit(1)),
             "doc_id",
             "left",
         )
         .join(
-            maybe_broadcast(near_kept.withColumn("_n", F.lit(1))),
+            near_kept.withColumn("_n", F.lit(1)),
             "doc_id",
             "left",
         )

@@ -282,10 +282,9 @@ def pca_project_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.var_pop("x"), 3).alias("var_p"),
         )
     )
-    from ..plans.hints import maybe_broadcast
 
     return (
-        stats.join(maybe_broadcast(ratios), "component")
+        stats.join(ratios, "component")
         # self-certifying invariant (r8): the PCA post-condition — each
         # projected component's empirical variance equals its eigenvalue
         # (and is centered) — computed in-plan at join time so the

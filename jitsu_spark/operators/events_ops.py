@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import EVENTS_TS_US_SQL, load_table
-from ..plans.hints import maybe_broadcast
 
 SESSION_GAP_MIN = 30
 
@@ -597,7 +596,7 @@ def ur_backfill_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("identified_at")
     )
     return (
-        ev.join(maybe_broadcast(identities), "user_id", "left")
+        ev.join(identities, "user_id", "left")
         .select(
             "event_id",
             "user_id",

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 
 
 def identity_map(events: DataFrame) -> DataFrame:
@@ -93,7 +92,7 @@ def user_recognition_backfill(events: DataFrame) -> DataFrame:
     rather than overwriting).
     """
     ids = identity_map(events)
-    joined = events.join(maybe_broadcast(ids), "anonymous_id", "left")
+    joined = events.join(ids, "anonymous_id", "left")
     backfilled_traits = F.when(
         F.col("resolved_traits").isNotNull() & F.col("traits").isNotNull(),
         F.map_zip_with(

@@ -149,9 +149,8 @@ def leakage_safe_split(
     if clusters is None:
         clusters = near_dup_clusters(spark, sf_dir)
     clusters = clusters.select("doc_id", "cluster_id")
-    from ..plans.hints import maybe_broadcast
 
-    keyed = docs.join(maybe_broadcast(clusters), "doc_id", "left").withColumn(
+    keyed = docs.join(clusters, "doc_id", "left").withColumn(
         "split_key", F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     )
     b = _bucket(F.col("split_key"))

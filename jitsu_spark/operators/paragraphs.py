@@ -309,8 +309,6 @@ def paragraph_survivors(
     the store nor a within-batch repeat — the frame BOTH halves of the
     gate derive from: the doc rebuild below and the streaming gate's
     store append (the hashes that become corpus state)."""
-    from ..plans.hints import maybe_broadcast
-
     wk = (F.col("doc_id") * PAR_SHIFT + F.col("pidx")).alias("wk")
     batch_kept = (
         batch_pars.select("par", F.md5("par").alias("par_hash"), wk)
@@ -321,12 +319,12 @@ def paragraph_survivors(
     )
     hits = (
         store_par_hashes.join(
-            maybe_broadcast(batch_kept.select("par_hash")), "par_hash"
+            batch_kept.select("par_hash"), "par_hash"
         )
         .select("par_hash")
         .distinct()
     )
-    return batch_kept.join(maybe_broadcast(hits), "par_hash", "left_anti")
+    return batch_kept.join(hits, "par_hash", "left_anti")
 
 
 def rebuild_from_survivors(

@@ -184,11 +184,10 @@ def _assign_cells_l2(unit: DataFrame, centroids: DataFrame) -> DataFrame:
     into one broadcast row and each corpus row folds it with a single
     `aggregate` (`similarity._argbest_expr`) — the corpus never shuffles
     (the previous window form exchanged and sorted N*K scored rows)."""
-    from ..plans.hints import maybe_broadcast
     from .similarity import _argbest_expr, _packed_centroids
 
     return (
-        unit.join(maybe_broadcast(_packed_centroids(centroids)))
+        unit.join(_packed_centroids(centroids))
         .withColumn("best", F.expr(_argbest_expr(_NEG_L2_SCORE)))
         # drop the empty-codebook init sentinel (cid=-1) — inner-join
         # semantics of the retired windowed form
@@ -350,7 +349,7 @@ _PQ_ART_MEMO_CAP = 64
 
 
 def _art_memo(kind: str, df: DataFrame, build) -> object:
-    from ..plans.hints import plan_fingerprint
+    from ..plans.store_memo import plan_fingerprint
 
     fp = plan_fingerprint(df)
     key = None if fp is None else (kind, fp)
@@ -487,7 +486,6 @@ def _probe_cells_pq(
     fixed q), MAP-SIDE: the O(K) codebook packs into one broadcast row and
     each query row sorts/slices K (d2, centroid_id) pairs in-place — the
     query table never shuffles and Q never collects."""
-    from ..plans.hints import maybe_broadcast
     from .similarity import _packed_centroids
 
     probe_expr = f"""
@@ -499,7 +497,7 @@ def _probe_cells_pq(
       1, {int(nprobe)})
     """
     return (
-        queries_df.join(maybe_broadcast(_packed_centroids(centroids)))
+        queries_df.join(_packed_centroids(centroids))
         .select("query_id", "q", F.explode(F.expr(probe_expr)).alias("pc"))
         .select("query_id", "q", F.col("pc.centroid_id").alias("centroid_id"))
     )
@@ -524,25 +522,20 @@ def _refine_exact(
     emb: DataFrame,
     top_k: int,
     round_sim: bool = True,
-    hint_broadcast: bool = False,
 ) -> DataFrame:
     """Exact cosine re-rank of an ADC shortlist (FAISS IndexRefineFlat).
     `queries_df` is (query_id, q) with q unit-normalized, so
     sim = q . n_emb / ||n_emb|| — the SAME expression in both paths."""
     from pyspark.sql import Window
 
-    from ..plans.hints import maybe_broadcast
-
     nv = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
         F.col("norm").alias("n_norm"),
     )
-    qside = maybe_broadcast(queries_df) if hint_broadcast else queries_df
-    nside = maybe_broadcast(nv) if hint_broadcast else nv
     exact = (
-        shortlist.join(qside, "query_id")
-        .join(nside, "neighbor_id")
+        shortlist.join(queries_df, "query_id")
+        .join(nv, "neighbor_id")
         .withColumn(
             "sim",
             F.expr(DOT.format(a="q", b="n_emb")) / F.col("n_norm"),
@@ -679,11 +672,8 @@ def ann_ivfpq_topk_stored(
         .select("query_id", "neighbor_id")
     )
     # exact re-score of the tiny shortlist via the SHARED refine stage
-    # (same normalized-dot expression as the bulk path); broadcast hints
-    # keep the corpus from shuffling for this handful of queries
-    return _refine_exact(
-        shortlist, queries_df, emb, top_k, hint_broadcast=True
-    )
+    # (same normalized-dot expression as the bulk path)
+    return _refine_exact(shortlist, queries_df, emb, top_k)
 
 
 def ann_ivfpq_topk_bulk(

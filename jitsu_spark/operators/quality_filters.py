@@ -19,8 +19,8 @@ Scale notes (100 TB stance):
   reason repetitive docs (the ones we're hunting) shrink the most.
 - `contamination_check` builds the held-out shingle set from the
   deterministic test split (5% of docs) and joins it to the train side.
-  The held-out set is the small side: size-gated broadcast
-  (`plans.hints.maybe_broadcast`), so the train corpus never shuffles —
+  The held-out set is the small side: Spark broadcasts it under
+  `autoBroadcastJoinThreshold`, so the train corpus never shuffles —
   at 1000 executors this is a map-side semi-join per partition.
 - `chunk_documents` is a generate (explode of window starts) — linear
   output, no shuffle; chunking 100 TB is a pure map stage.
@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..tables import load_table
 from .sampling import _bucket, _bucket_duck
 from .text_ops import STOPWORDS, TOKENS, TOKENS_DUCK
@@ -316,8 +315,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per contaminated train doc (inner semantics — clean
     docs are the uninteresting majority) with distinct-shingle counts and
     the overlap fraction. The held-out set is ~5% of the corpus and only
-    distinct shingle hashes cross the wire; `maybe_broadcast` keeps the
-    train side shuffle-free while the held-out set fits."""
+    distinct shingle hashes cross the wire; Spark's broadcast threshold
+    keeps the train side shuffle-free while the held-out set fits."""
     # r12: the tokenize+shingle pass ran directly on the scan — one task
     # on a single-row-group input (guide §2.5). Hash the narrow
     # projection by doc_id first (no-op cost at production where the
@@ -343,7 +342,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total, count(match marker) its held-out overlap — no second scan of
     # the corpus for totals and no join-back.
     marked = train_sh.join(
-        maybe_broadcast(test_shingles.withColumn("hit", F.lit(1))),
+        test_shingles.withColumn("hit", F.lit(1)),
         "shingle",
         "left",
     )
@@ -486,8 +485,8 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 decimals, so the histogram has at most 1e6+1 rows per source no
     matter how many documents a source holds — the groupBy partial-
     aggregates map-side and the cumulative window sorts a bounded table.
-    The per-value pct_rank then joins back onto the corpus (size-gated
-    broadcast; above the gate AQE re-plans from measured sizes — the
+    The per-value pct_rank then joins back onto the corpus (broadcast
+    under Spark's threshold; above it AQE re-plans from measured sizes — the
     histogram is bounded by value space, not by N, so it measures small).
     Net: one bounded shuffle + one broadcast join replace the single-task
     per-source corpus sort the window form needs."""
@@ -517,7 +516,7 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE cnt_lt / (n_total - 1) END AS pr",
     )
     joined = scored.join(
-        maybe_broadcast(ranks),
+        ranks,
         scored["source"].eqNullSafe(ranks["r_source"])
         & scored["sw_ratio"].eqNullSafe(ranks["r_ratio"]),
     )
@@ -778,7 +777,7 @@ def retrieval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         queries.join(train_tf, "shingle")
-        .join(maybe_broadcast(train_dl), "train_doc_id")
+        .join(train_dl, "train_doc_id")
         .crossJoin(F.broadcast(stats))
         .selectExpr("test_doc_id", "train_doc_id", f"{_BM25_TERM} AS s")
         .groupBy("test_doc_id", "train_doc_id")
@@ -871,7 +870,7 @@ def length_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = lens.groupBy("source").agg(
         F.expr("percentile(n_tokens, 0.5)").alias("median_tokens")
     )
-    dev = lens.join(maybe_broadcast(med), "source").selectExpr(
+    dev = lens.join(med, "source").selectExpr(
         "doc_id",
         "source",
         "n_tokens",
@@ -881,7 +880,7 @@ def length_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     mad = dev.groupBy("source").agg(
         F.expr("percentile(adev, 0.5)").alias("mad")
     )
-    return dev.join(maybe_broadcast(mad), "source").selectExpr(
+    return dev.join(mad, "source").selectExpr(
         "doc_id",
         "source",
         "n_tokens",
@@ -1093,7 +1092,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("t_docs"), F.sum("n_tok").alias("t_toks")
     )
     return (
-        swept.crossJoin(maybe_broadcast(totals))  # 1-row scalar join
+        swept.crossJoin(totals)  # 1-row scalar join
         .selectExpr(
             # explicit DOUBLE: Spark parses bare decimal literals as
             # DECIMAL, which would hash-mismatch DuckDB's doubles

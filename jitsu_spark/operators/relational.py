@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +88,7 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
             F.round(
@@ -135,14 +134,14 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
         .join(
-            maybe_broadcast(customer),
+            customer,
             (orders.o_custkey == customer.c_custkey)
             & (customer.c_nationkey == supplier.s_nationkey),
         )
-        .join(maybe_broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(maybe_broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
             F.round(
@@ -255,8 +254,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(maybe_broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             F.round(
@@ -294,7 +293,7 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .agg(
             F.round(
                 100
@@ -334,8 +333,8 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("total_qty") > 250)
     )
     return (
-        orders.join(maybe_broadcast(big), orders.o_orderkey == big.l_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
+        orders.join(big, orders.o_orderkey == big.l_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .select(
             "c_name",
             "c_custkey",
@@ -384,10 +383,10 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(maybe_broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-        .join(maybe_broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(sn, F.col("s_nationkey") == F.col("s_nk"))
+        .join(cn, F.col("c_nationkey") == F.col("c_nk"))
         .where(
             ((F.col("supp_nation") == n1) & (F.col("cust_nation") == n2))
             | ((F.col("supp_nation") == n2) & (F.col("cust_nation") == n1))
@@ -438,10 +437,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(maybe_broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(nation, F.col("s_nationkey") == nation.n_nationkey)
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(
@@ -477,7 +476,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     `p_size >= 1` and the join key still push down)."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    j = li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
+    j = li.join(part, li.l_partkey == part.p_partkey)
     clause1 = (
         (F.col("p_brand") == "Brand#12")
         & F.col("p_size").between(1, 5)

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 
 
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,9 +53,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     europe_sup = (
         supplier.join(
-            maybe_broadcast(nation), supplier.s_nationkey == nation.n_nationkey
+            nation, supplier.s_nationkey == nation.n_nationkey
         )
-        .join(maybe_broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     # r12: both dim filters are on the pair-dedup KEYS, so
@@ -68,12 +67,12 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.select("l_partkey", "l_suppkey")
         .join(
-            maybe_broadcast(part.select("p_partkey")),
+            part.select("p_partkey"),
             F.col("l_partkey") == F.col("p_partkey"),
             "left_semi",
         )
         .join(
-            maybe_broadcast(europe_sup.select("s_suppkey")),
+            europe_sup.select("s_suppkey"),
             F.col("l_suppkey") == F.col("s_suppkey"),
             "left_semi",
         )
@@ -82,8 +81,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_one")
     )
     offers = (
-        pairs.join(maybe_broadcast(part), pairs.l_partkey == part.p_partkey)
-        .join(maybe_broadcast(europe_sup), pairs.l_suppkey == F.col("s_suppkey"))
+        pairs.join(part, pairs.l_partkey == part.p_partkey)
+        .join(europe_sup, pairs.l_suppkey == F.col("s_suppkey"))
         .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name")
     )
     w = Window.partitionBy("p_partkey")
@@ -136,9 +135,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_retailprice"
     ) * F.col("l_quantity")
     return (
-        li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
-        .join(maybe_broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(maybe_broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(nation, F.col("s_nationkey") == nation.n_nationkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -177,12 +176,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
     lines = li.join(
-        maybe_broadcast(
-            supplier.join(
-                maybe_broadcast(nation),
-                supplier.s_nationkey == nation.n_nationkey,
-            ).select("s_suppkey")
-        ),
+        supplier.join(
+            nation,
+            supplier.s_nationkey == nation.n_nationkey,
+        ).select("s_suppkey"),
         li.l_suppkey == F.col("s_suppkey"),
     ).select("l_partkey", "l_extendedprice")
     per_part = lines.groupBy("l_partkey").agg(
@@ -190,7 +187,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = per_part.agg(F.sum("value").alias("total_value"))
     return (
-        per_part.crossJoin(maybe_broadcast(total))
+        per_part.crossJoin(total)
         .where(F.col("value") > F.lit(0.001) * F.col("total_value"))
         .select("l_partkey", F.round("value", 2).alias("value"))
         .orderBy(F.desc("value"), F.asc("l_partkey"))
@@ -321,9 +318,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
-        revenue.crossJoin(maybe_broadcast(top))
+        revenue.crossJoin(top)
         .where(F.col("total_revenue") == F.col("max_revenue"))
-        .join(maybe_broadcast(supplier), F.col("supplier_no") == supplier.s_suppkey)
+        .join(supplier, F.col("supplier_no") == supplier.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
     )
@@ -370,9 +367,9 @@ def q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select("l_partkey", "l_suppkey")
-        .join(maybe_broadcast(part), F.col("l_partkey") == part.p_partkey)
+        .join(part, F.col("l_partkey") == part.p_partkey)
         .join(
-            maybe_broadcast(bad_sup),
+            bad_sup,
             F.col("l_suppkey") == bad_sup.s_suppkey,
             "left_anti",
         )
@@ -409,7 +406,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_brand") == "Brand#11") & (F.col("p_type") == "SMALL")
     )
     li = load_table(spark, sf_dir, "lineitem")
-    branded = li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey).select(
+    branded = li.join(part, li.l_partkey == part.p_partkey).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     w = Window.partitionBy("l_partkey")
@@ -453,7 +450,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     heavy = (
-        li.join(maybe_broadcast(red_parts), li.l_partkey == F.col("p_partkey"))
+        li.join(red_parts, li.l_partkey == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .where(F.col("qty") > 40)
@@ -461,7 +458,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         supplier.join(
-            maybe_broadcast(nation), supplier.s_nationkey == nation.n_nationkey
+            nation, supplier.s_nationkey == nation.n_nationkey
         )
         .join(heavy, supplier.s_suppkey == heavy.l_suppkey, "left_semi")
         .select("s_name", "s_acctbal")
@@ -537,11 +534,11 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("n_late_supp") == 1)
     )
     nation2_sup = supplier.join(
-        maybe_broadcast(nation), supplier.s_nationkey == nation.n_nationkey
+        nation, supplier.s_nationkey == nation.n_nationkey
     ).select("s_suppkey", "s_name")
     return (
         winners.join(
-            maybe_broadcast(nation2_sup),
+            nation2_sup,
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .groupBy("s_name")
@@ -598,7 +595,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("c_acctbal").alias("avg_bal")
     )
     return (
-        customer.crossJoin(maybe_broadcast(avg_bal))
+        customer.crossJoin(avg_bal)
         .where(F.col("c_acctbal") > F.col("avg_bal"))
         .join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("c_nationkey")

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..tables import EVENTS_TS_US_SQL, load_table
 
 # ---------------------------------------------------------------------------
@@ -422,11 +421,11 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         inter.join(
-            maybe_broadcast(sizes.selectExpr("event_type AS type_a", "n_users AS na")),
+            sizes.selectExpr("event_type AS type_a", "n_users AS na"),
             "type_a",
         )
         .join(
-            maybe_broadcast(sizes.selectExpr("event_type AS type_b", "n_users AS nb")),
+            sizes.selectExpr("event_type AS type_b", "n_users AS nb"),
             "type_b",
         )
         .selectExpr(
@@ -516,7 +515,7 @@ def audience_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tol = f"greatest(CAST({HLL_REL_BOUND} AS DOUBLE) * exact_union, 2.0)"
     return (
-        pairs.join(maybe_broadcast(inter), ["type_a", "type_b"], "left")
+        pairs.join(inter, ["type_a", "type_b"], "left")
         .selectExpr(
             "type_a",
             "type_b",
@@ -845,7 +844,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks = _value_pct_rank(base, col, asc, small)
         scored = (
             scored.join(
-                maybe_broadcast(ranks), scored[col] == ranks["v"]
+                ranks, scored[col] == ranks["v"]
             )
             .withColumn(name, F.expr(score))
             .drop("v", "pr")

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..tables import load_table
 
 # 0..999 bucket from the first 7 hex digits of md5 of the key. 7 hex
@@ -59,7 +58,7 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source string, keep_per_mille int",
     )
     return (
-        docs.join(maybe_broadcast(rates), "source")
+        docs.join(rates, "source")
         .where(_bucket(F.col("doc_id")) < F.col("keep_per_mille"))
         .select("doc_id", "source", "lang", "n_chars")
     )
@@ -128,7 +127,7 @@ def source_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source string, whole int, frac_per_mille int",
     )
     return (
-        docs.join(maybe_broadcast(rates), "source")
+        docs.join(rates, "source")
         .withColumn(
             "n_copies",
             F.col("whole")
@@ -200,7 +199,7 @@ def temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     masses = (
-        masses.crossJoin(maybe_broadcast(unit))
+        masses.crossJoin(unit)
         .withColumn(
             "mu_s", F.expr("greatest(CAST(1 AS BIGINT), m_s DIV unit)")
         )
@@ -211,12 +210,12 @@ def temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = masses.select(
         F.sum("mu_s").alias("mu_total"), F.sum("s_s").alias("s_total")
     )
-    rates = masses.crossJoin(maybe_broadcast(totals)).selectExpr(
+    rates = masses.crossJoin(totals).selectExpr(
         "source",
         "(s_s * mu_total * 1000) DIV (mu_s * s_total) AS cpm",
     )
     return (
-        docs.join(maybe_broadcast(rates), "source")
+        docs.join(rates, "source")
         .withColumn(
             "n_copies",
             F.expr("cpm DIV 1000")
@@ -351,7 +350,7 @@ def token_budget_over(
     )
     return (
         ranked.join(
-            maybe_broadcast(offs),
+            offs,
             # null-safe on source: a NULL-source stratum is still a
             # stratum (the window twin and the oracle both keep it)
             F.col("source").eqNullSafe(F.col("o_source"))

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -95,7 +94,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("q_norm"),
     )
     scored = (
-        emb.join(maybe_broadcast(queries), F.col("vec_id") != F.col("query_id"))
+        emb.join(queries, F.col("vec_id") != F.col("query_id"))
         .withColumn(
             "sim",
             F.expr(DOT.format(a="q_emb", b="embedding"))
@@ -210,7 +209,7 @@ def _assignments(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     DOT fold, evaluated once per centroid, so the chosen cell and its
     similarity are bit-identical to the windowed form."""
     return (
-        emb.join(maybe_broadcast(_packed_centroids(centroids)))
+        emb.join(_packed_centroids(centroids))
         .withColumn("best", F.expr(_argbest_expr(_COSINE_SCORE)))
         # cid = -1 is the fold's init sentinel: it survives only when the
         # centroid table was EMPTY (collect_list aggregates to one row
@@ -244,7 +243,7 @@ def _probe_cells(queries: DataFrame, centroids: DataFrame) -> DataFrame:
       1, {int(NPROBE)})
     """
     return (
-        queries.join(maybe_broadcast(_packed_centroids(centroids)))
+        queries.join(_packed_centroids(centroids))
         .select(
             "query_id",
             "q_emb",
@@ -513,11 +512,8 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     2. Exact re-score of the (few) candidates with the same sequential
        aggregate expression the SQL oracle uses, so the emitted sims are
        bit-identical to a full brute-force pass — the epsilon margin only
-       admits extra candidates for the exact filter to reject. The
-       embedding sides get size-gated broadcast hints (plans/hints.py).
+       admits extra candidates for the exact filter to reject.
     """
-    from ..plans.hints import maybe_broadcast
-
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
 
     n_rows = _corpus_rows(sf_dir)
@@ -537,8 +533,8 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("nb"),
     )
     return (
-        cand.join(maybe_broadcast(a), "vec_a")
-        .join(maybe_broadcast(b), "vec_b")
+        cand.join(a, "vec_a")
+        .join(b, "vec_b")
         .withColumn(
             "sim",
             F.expr(DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")),
@@ -607,7 +603,7 @@ def knn_label_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     counted = (
-        topk.join(maybe_broadcast(labels), "neighbor_id")
+        topk.join(labels, "neighbor_id")
         .groupBy("query_id", "n_label")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
@@ -941,7 +937,7 @@ def semantic_dedup_keep_list(
         labeled = _live_cluster_labels(spark, sf_dir)
     vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     return (
-        vecs.join(maybe_broadcast(labeled), "vec_id", "left")
+        vecs.join(labeled, "vec_id", "left")
         .selectExpr(
             "vec_id",
             "label",

@@ -261,13 +261,12 @@ def text_semantic_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_rows if n_rows is not None else vecs.count(),
         TEXT_DUP_COS_THRESHOLD,
     )
-    from ..plans.hints import maybe_broadcast
 
     a = vecs.selectExpr("doc_id AS vec_a", "vec AS va", "nn AS na2")
     b = vecs.selectExpr("doc_id AS vec_b", "vec AS vb", "nn AS nb2")
     return (
-        cand.join(maybe_broadcast(a), "vec_a")
-        .join(maybe_broadcast(b), "vec_b")
+        cand.join(a, "vec_a")
+        .join(b, "vec_b")
         .withColumn(
             "sim",
             # dot of integer-valued doubles: every product and partial

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..tables import load_table
 
 # Tokens = maximal runs of non-whitespace; identical regex semantics in
@@ -408,7 +407,7 @@ def _query_vocab(queries: DataFrame) -> list[str]:
     corpus; Spark compiles the >10-element IN to an InSet hash probe.
     Terms are SQL-escaped before literal interpolation — queries_df is
     caller data, not trusted expression text (r8 review finding)."""
-    from ..plans.hints import plan_fingerprint
+    from ..plans.store_memo import plan_fingerprint
 
     key = plan_fingerprint(queries)
     if key is not None and key in _VOCAB_MEMO:
@@ -681,7 +680,7 @@ def _dense_scored(docs_tbl: DataFrame, queries: DataFrame) -> DataFrame:
     )
     return (
         dots.join(F.broadcast(qnorm), "query_id")
-        .join(maybe_broadcast(dnorm), "doc_id")
+        .join(dnorm, "doc_id")
         .where("qn > 0 AND dn > 0")
         .selectExpr("query_id", "doc_id", "round(dot / (qn * dn), 6) AS sim")
     )
@@ -969,7 +968,7 @@ WHERE pos <= max_pos - {WINNOW_W - 1}
 # and near-dup triage UIs attach to every document.
 #
 # Scale: one token explode -> (doc, term) tf counts (partial-agg); the df
-# table is vocabulary-sized and joins back size-gated; the per-doc rank
+# table is vocabulary-sized and joins back by broadcast; the per-doc rank
 # window partitions BY doc_id — each frame is bounded by the document's
 # own vocabulary, so no task ever sorts more than one document's terms.
 # ---------------------------------------------------------------------------
@@ -1003,7 +1002,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
-        tf.join(maybe_broadcast(dfreq), "term")
+        tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .selectExpr(
             "doc_id",

@@ -46,7 +46,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..tables import load_table
 from .paragraphs import PAR_SHIFT, PAR_WORDS, paragraphs_of_docs
 from .quality_filters import (
@@ -129,7 +128,7 @@ def _stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     exact = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", "text")
-        .join(maybe_broadcast(exact_ids.select("doc_id", "n_tok")), "doc_id")
+        .join(exact_ids.select("doc_id", "n_tok"), "doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
     pars = paragraphs_of_docs(exact.select("doc_id", "source", "text"))

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..plans.hints import maybe_broadcast
 from .text_ops import TOKENS, TOKENS_DUCK
 
 # ---------------------------------------------------------------------------
@@ -200,8 +199,8 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = toks.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     n = toks.agg(F.count(F.lit(1)).cast("double").alias("n"))
     kl = (
-        sw.join(maybe_broadcast(w), "tok")
-        .join(maybe_broadcast(s), "source")
+        sw.join(w, "tok")
+        .join(s, "source")
         .crossJoin(F.broadcast(n))
         .selectExpr(
             "source",

@@ -69,8 +69,11 @@ def rank_unique(
     and a ties-equal rank is recovered as min(cnt_better) over the tie
     group (a skinny window), never a corpus join.
 
-    Uniqueness is NOT enforced here (no aggregate runs to detect it);
-    callers compose a per-row-unique column (doc_id) into value_cols,
+    Uniqueness is enforced without an aggregate: the range exchange puts
+    equal keys in one partition, adjacent after the sort, so the Arrow
+    pass compares each row's key with the previous row's (carried across
+    batches) and raises on the first duplicate, like `carry=` does.
+    Callers compose a per-row-unique column (doc_id) into value_cols,
     which makes collisions impossible by construction."""
     spark = df.sparkSession
     from pyspark.sql import functions as FF
@@ -89,11 +92,30 @@ def rank_unique(
         import pandas as pd
         from pyspark import TaskContext
 
+        def same(a, b):
+            return (a == b) | (pd.isna(a) & pd.isna(b))
+
         pid = TaskContext.get().partitionId()
         run = 0
+        last = None  # key of the previous batch's last row
         for pdf in batches:
             if not len(pdf):
                 continue
+            keys = [pdf[c].to_numpy() for c in value_cols]
+            dup_row = np.ones(len(pdf), dtype=bool)
+            dup_row[0] = last is not None
+            for k, v in enumerate(keys):
+                dup_row[1:] &= same(v[1:], v[:-1])
+                if last is not None:
+                    dup_row[0] &= bool(same(v[0], last[k]))
+            if dup_row.any():
+                i = int(dup_row.argmax())
+                dup = tuple(v[i] for v in keys)
+                raise ValueError(
+                    "rank_unique requires unique keys; duplicate value: "
+                    f"{dup if len(dup) > 1 else dup[0]!r}"
+                )
+            last = [v[-1] for v in keys]
             out = pdf.copy()
             out["local_better"] = run + np.arange(len(pdf), dtype=np.int64)
             out["pid"] = np.int32(pid)
@@ -123,9 +145,8 @@ def rank_unique(
             "sum(t) OVER () AS n_total",
         )
     )
-    from .hints import maybe_broadcast
 
-    return with_pid.join(maybe_broadcast(offsets), "pid").selectExpr(
+    return with_pid.join(offsets, "pid").selectExpr(
         *cols, "local_better + off AS cnt_better", "n_total"
     )
 
@@ -180,7 +201,6 @@ def histogram_cnt_better(
             " AS cnt_better",
             "sum(cnt) OVER () AS n_total",
         )
-    from .hints import maybe_broadcast
 
     order = F.col("v").asc() if ascending else F.col("v").desc()
     n_parts = partitions or int(
@@ -256,6 +276,6 @@ def histogram_cnt_better(
             "sum(t) OVER () AS n_total",
         )
     )
-    return with_pid.join(maybe_broadcast(offsets), "pid").selectExpr(
+    return with_pid.join(offsets, "pid").selectExpr(
         "v", "cnt", *carry_cols, "local_better + off AS cnt_better", "n_total"
     )

@@ -56,7 +56,7 @@ def _conf_token(df: DataFrame) -> tuple:
 
 
 def _num_partitions(df: DataFrame) -> int | None:
-    from .hints import plan_fingerprint
+    from .store_memo import plan_fingerprint
 
     key = plan_fingerprint(df)
     if key is not None:

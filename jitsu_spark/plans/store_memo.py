@@ -14,7 +14,9 @@ The fingerprint contract: a dataset key is the (path, per-file
 size/mtime) tuple of the backing parquet, or None when the stat fails
 (e.g. a race with dataset regeneration). None DISABLES memoization for
 the call instead of returning a degenerate key that could collide
-across dataset versions and serve a stale store.
+across dataset versions and serve a stale store. `plan_fingerprint`
+applies the same contract to a DataFrame's plan, for the driver memos
+keyed on a computation rather than a table file.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ from __future__ import annotations
 import os
 import tempfile
 from collections.abc import Callable
+
+from pyspark.sql import DataFrame
 
 
 def dataset_fingerprint(sf_dir: str, table_file: str) -> tuple | None:
@@ -40,6 +44,30 @@ def dataset_fingerprint(sf_dir: str, table_file: str) -> tuple | None:
     except OSError:
         return None
     return (os.path.abspath(sf_dir), tuple(parts))
+
+
+def plan_fingerprint(df: DataFrame) -> tuple | None:
+    """Freshness-aware identity of a DataFrame's logical computation:
+    (analyzed semanticHash, (file, mtime_ns, size) per input file).
+
+    The semanticHash canonicalizes expression ids but keeps relation
+    identity — for local relations it covers the literal rows; for
+    file-backed plans the mtime/size tokens make the key stale the
+    moment any input file is rewritten (tables.load_table's freshness
+    discipline). Returns None when the plan cannot be analyzed; callers
+    must treat None as "never memoize"."""
+    try:
+        h = df._jdf.queryExecution().analyzed().semanticHash()
+        toks = []
+        for f in sorted(df.inputFiles()):
+            p = f[5:] if f.startswith("file:") else f
+            while p.startswith("//"):
+                p = p[1:]
+            st = os.stat(p)
+            toks.append((f, st.st_mtime_ns, st.st_size))
+        return (h, tuple(toks))
+    except Exception:
+        return None
 
 
 def ensure_store(

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .hints import maybe_broadcast
 
 # Persisted scored frames from PRIOR calls, oldest first. Nothing can
 # unpersist a frame before its own action has consumed it, but unbounded
@@ -145,7 +144,7 @@ def two_phase_topk(
         " AS cnt_better",
     ).where(F.col("cnt_better") < k)
     cand = scored.join(
-        maybe_broadcast(band),
+        band,
         (scored[group_col] == band["h_group"])
         & (scored[score_col] == band["h_score"]),
     ).drop("h_group", "h_score", "cnt_better")

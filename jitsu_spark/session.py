@@ -26,8 +26,9 @@ def get_spark(
     - Arrow enabled: every pandas UDF / applyInPandas crosses the JVM<->Python
       boundary in columnar batches, never row-at-a-time pickling.
     - Broadcast threshold left at default (10 MB); dimension tables (region,
-      nation, supplier, config tables) broadcast automatically, and we also
-      hint explicitly at join sites.
+      nation, supplier, config tables) broadcast automatically. Only sides
+      bounded by construction (one-row scalars, query sets, config tables)
+      carry an explicit `F.broadcast`; every other join follows this conf.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "4") or "4")

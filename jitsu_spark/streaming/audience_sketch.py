@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.reports import HLL_LGK
 
@@ -75,22 +74,3 @@ def compact_audience_store(
         .localCheckpoint()  # pin before the overwrite reads-what-it-writes
     )
     merged.write.mode("overwrite").parquet(sketch_store_dir)
-
-
-def run_audience_sketch(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    sketch_store_dir: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Wire the sketch appender behind a micro-batch stream."""
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda b, _id: process_audience_batch(b, sketch_store_dir)
-        )
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

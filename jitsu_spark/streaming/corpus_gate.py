@@ -137,7 +137,6 @@ def process_gated_batch_durable(
     store-first + crash -> replay drops rows never written.)
     """
     from ..operators.dedup import append_fingerprints, fingerprint_verdicts
-    from ..plans.hints import maybe_broadcast
 
     spark = batch.sparkSession
     if bloom_summary_dir is not None:
@@ -169,7 +168,7 @@ def process_gated_batch_durable(
         )
 
         near_docs = batch.select("doc_id", "text").join(
-            maybe_broadcast(keep.select("doc_id")), "doc_id", "left_semi"
+            keep.select("doc_id"), "doc_id", "left_semi"
         )
         collide = None
         new_sig = None
@@ -221,7 +220,7 @@ def process_gated_batch_durable(
         # absence must default to 'new' (exact gate only), never to a
         # silent permanent drop (r7 review finding)
         rejected = near_v.where(F.col("verdict") != "new").select("doc_id")
-        keep = keep.join(maybe_broadcast(rejected), "doc_id", "left_anti")
+        keep = keep.join(rejected, "doc_id", "left_anti")
         if rejected.take(1):
             # replay backfill (see docstring crash case 2): near-rejected
             # docs whose OWN signatures are stored were fully MERGEd by a
@@ -230,13 +229,13 @@ def process_gated_batch_durable(
             # rejected set broadcasts.
             replayed = (
                 store_sig.join(
-                    maybe_broadcast(rejected), "doc_id", "left_semi"
+                    rejected, "doc_id", "left_semi"
                 )
                 .select("doc_id")
                 .distinct()
             )
             backfill = verdicts.where(F.col("verdict") == "new").join(
-                maybe_broadcast(replayed), "doc_id", "left_semi"
+                replayed, "doc_id", "left_semi"
             )
             if backfill.take(1):
                 append_fingerprints(
@@ -266,7 +265,7 @@ def process_gated_batch_durable(
             # order left a window where lost signatures admitted later
             # near-dups of already-ingested content forever.
             surviving_exact = verdicts.join(
-                maybe_broadcast(fresh.select("doc_id")),
+                fresh.select("doc_id"),
                 "doc_id",
                 "left_semi",
             )
@@ -450,39 +449,6 @@ def process_paragraph_batch_durable(
         new_hashes.write.mode("append").partitionBy("bucket").parquet(
             par_store_dir
         )
-
-
-def run_paragraph_gate_durable(
-    stream: DataFrame,
-    warehouse_sink,
-    checkpoint_dir: str,
-    par_store_dir: str,
-    table: str = "corpus_stripped",
-    trigger: dict | None = None,
-    bloom_summary_dir: str | None = None,
-    split_mode: str = "window",
-) -> StreamingQuery:
-    """The durable paragraph gate: stream -> per-batch strip against
-    the corpus paragraph store -> MERGE rebuilt docs -> append the new
-    paragraph hashes. The streaming twin of the batch
-    `paragraph_dedup_incremental` entry, sharing its semantics (store
-    paragraphs always win; within a batch the packed (doc_id, pidx)
-    minimum wins). With `bloom_summary_dir`, all-fresh batches skip
-    the paragraph-store scan (`operators/bloom`)."""
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda b, _id: process_paragraph_batch_durable(
-                b, par_store_dir, warehouse_sink, table,
-                bloom_summary_dir=bloom_summary_dir,
-                split_mode=split_mode,
-            )
-        )
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def run_corpus_gate(

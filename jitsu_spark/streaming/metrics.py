@@ -7,7 +7,7 @@ Reference: per-function status counts are minute-truncated and buffered
 (`webapps/console/prisma/metrics.sql:71-110`); billing uses hourly
 `uniq(messageId)` (`metrics.sql:2-29`).
 
-Spark shape (SURVEY §2.6 A2-A4): a windowed streaming aggregation with a
+Spark shape (SURVEY §2.6 A2-A3): a windowed streaming aggregation with a
 watermark. Spark's partial aggregation is the `sumState` half; HLL++
 (`approx_count_distinct`) is `uniqState`. Output mode `update` + an
 upsert sink equals ClickHouse's merge-on-read: per-window rows converge
@@ -70,21 +70,6 @@ def sessionize_stream(
     )
 
 
-def active_events_hourly_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    ts_col: str = "timestamp",
-    workspace_col: str = "connection_id",
-) -> DataFrame:
-    """Billing metric (A4): approx distinct messages per workspace-hour."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 hour").alias("w"), F.col(workspace_col))
-        .agg(F.approx_count_distinct("message_id").alias("active_events"))
-        .select(F.col("w.start").alias("hour"), workspace_col, "active_events")
-    )
-
-
 def anomaly_on_rollup(rollup: DataFrame) -> DataFrame:
     """Alerting pass over the (merged) rollup store: total the per-status
     minute counts and z-score them against the trailing baseline — run
@@ -124,8 +109,6 @@ def drift_on_rollup(
     rollup side is already aggregated per (period, bucket) — the join and
     both window-free aggregates are tiny regardless of event volume.
     """
-    from ..plans.hints import maybe_broadcast
-
     base = baseline.groupBy(F.col(bucket_col).alias("bucket")).agg(
         F.sum("cnt").alias("c_base")
     )
@@ -135,7 +118,7 @@ def drift_on_rollup(
     # every (period, baseline-bucket) pair must exist so a bucket that
     # VANISHED from live traffic still contributes drift
     periods = cur.select("period").distinct()
-    grid = periods.crossJoin(maybe_broadcast(base))
+    grid = periods.crossJoin(base)
     joined = grid.join(cur, ["period", "bucket"], "full_outer").selectExpr(
         "period",
         "bucket",
@@ -147,7 +130,7 @@ def drift_on_rollup(
         F.sum("c_cur").alias("t_cur"),
         F.count(F.lit(1)).alias("n_buckets"),
     )
-    terms = joined.join(maybe_broadcast(totals), "period").selectExpr(
+    terms = joined.join(totals, "period").selectExpr(
         "period",
         "bucket",
         # greatest(1, ...): past ~10k rows per side the floor division

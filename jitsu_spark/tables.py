@@ -100,10 +100,6 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so spark.sql() sees the same
     names the DuckDB oracle does."""

@@ -171,7 +171,6 @@ class TestTemperatureResample:
         """Heavier sources get cpm below 1000 x their natural share ratio;
         lighter sources get cpm above — alpha=0.5 moves every share toward
         the mean."""
-        from jitsu_spark.operators.clustering import maybe_broadcast  # noqa: F401
         from jitsu_spark.tables import load_table
 
         docs = load_table(spark, SF_DIR, "documents")

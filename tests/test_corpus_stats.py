@@ -109,7 +109,6 @@ class TestIncrementalDedup:
         through a broadcast join whose build side is the BATCH — the
         store scan must not sit under a shuffle exchange."""
         from jitsu_spark.operators.dedup import build_fingerprint_store
-        from jitsu_spark.plans.hints import maybe_broadcast
 
         store_dir = str(tmp_path / "fp3")
         build_fingerprint_store(spark, sf_dir, store_dir)
@@ -118,7 +117,7 @@ class TestIncrementalDedup:
             [(1, "x")], "doc_id long, text string"
         ).select("doc_id", F.md5("text").alias("text_hash"))
         hits = store.join(
-            maybe_broadcast(batch.select("text_hash").distinct()), "text_hash"
+            batch.select("text_hash").distinct(), "text_hash"
         )
         plan = hits._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
-from jitsu_spark.plans.hints import plan_fingerprint
+from jitsu_spark.plans.store_memo import plan_fingerprint
 from jitsu_spark.operators.text_ops import _query_vocab, _VOCAB_MEMO
 
 
@@ -172,25 +172,6 @@ def test_fan_out_partition_probe_memo_tracks_rewrites(spark, tmp_path):
     n2 = _num_partitions(spark.read.parquet(p))
     assert n2 is not None and n2 > 1
     assert len(_NPART_MEMO) >= 1
-
-
-def test_plan_size_memo_tracks_rewrites(spark, tmp_path):
-    """r13 (VERDICT r12 "What's wrong" #5): plan_size_bytes memoizes on
-    the freshness-aware fingerprint, so rewriting the same path must
-    re-estimate — a stale size could mis-place a broadcast hint."""
-    from jitsu_spark.plans.hints import plan_size_bytes
-
-    p = str(tmp_path / "size.parquet")
-    spark.range(0, 10).write.mode("overwrite").parquet(p)
-    s1 = plan_size_bytes(spark.read.parquet(p))
-    assert s1 is not None and s1 > 0
-    # warm hit on same bytes
-    assert plan_size_bytes(spark.read.parquet(p)) == s1
-    spark.range(0, 100_000).selectExpr(
-        "id", "repeat('x', 64) AS pad"
-    ).write.mode("overwrite").parquet(p)
-    s2 = plan_size_bytes(spark.read.parquet(p))
-    assert s2 is not None and s2 > s1
 
 
 def test_npart_memo_keys_on_session_confs(spark, tmp_path):

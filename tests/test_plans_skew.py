@@ -59,42 +59,21 @@ class TestPlanShape:
         assert "Exchange" not in plan
 
 
-class TestSizeGatedBroadcast:
-    """plans/hints.maybe_broadcast: hint under the threshold, plain join +
-    AQE above it (the fallback the 100x plan needs)."""
-
-    def test_broadcasts_under_threshold(self, spark, sf_dir):
-        from jitsu_spark.operators.relational import q5_region_revenue
-
-        plan = _plan(q5_region_revenue(spark, sf_dir))
-        assert plan.count("BroadcastHashJoin") >= 4
-
-    def test_fallback_engages_when_threshold_zero(self, spark, sf_dir, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX", "0")
+class TestBroadcastFollowsSessionThreshold:
+    def test_threshold_off_means_no_broadcast(self, spark, sf_dir):
+        """Join strategy is Spark's own choice: with
+        `spark.sql.autoBroadcastJoinThreshold=-1` no join site forces a
+        broadcast behind the user's back."""
         from jitsu_spark.operators.identity import identity_stitch
 
-        plan = _plan(identity_stitch(spark, sf_dir))
-        # with the hint gated off, no *hinted* broadcast remains in the
-        # pre-AQE plan; the join degrades to a shuffle join Spark may still
-        # re-plan adaptively from measured sizes
-        assert "ResolvedHint" not in plan
-
-    def test_plan_size_estimate_available(self, spark, sf_dir):
-        from jitsu_spark.plans.hints import plan_size_bytes
-        from jitsu_spark.tables import load_table
-
-        n = plan_size_bytes(load_table(spark, sf_dir, "nation"))
-        li = plan_size_bytes(load_table(spark, sf_dir, "lineitem"))
-        assert n is not None and li is not None and n < li
-
-    def test_maybe_broadcast_object_identity(self, spark, monkeypatch):
-        from jitsu_spark.plans.hints import maybe_broadcast
-
-        df = spark.range(10)
-        monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX", "0")
-        assert maybe_broadcast(df) is df  # gated off -> unchanged
-        monkeypatch.delenv("SPARK_GRAFT_BROADCAST_MAX")
-        assert maybe_broadcast(df) is not df  # hinted
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        spark.conf.set(key, "-1")
+        try:
+            plan = _plan(identity_stitch(spark, sf_dir))
+        finally:
+            spark.conf.unset(key)
+        assert "BroadcastHashJoin" not in plan, plan
+        assert "SortMergeJoin" in plan, plan
 
 
 class TestNoDriverMaterialization:

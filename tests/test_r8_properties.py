@@ -197,6 +197,38 @@ class TestHistogramCarry:
                 assert r["cnt_better"] == i
                 assert r["n_total"] == 37
 
+    def test_rank_unique_on_duplicate_keys_raises(self, spark):
+        """rank_unique declares its key jointly unique; a duplicate must
+        fail loud instead of ranking both rows silently — also when the
+        two rows arrive in different Arrow batches. Unique keys still
+        rank exactly."""
+        import pytest
+
+        from jitsu_spark.plans.cumsum import rank_unique
+
+        batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        keys = ["key", "doc_id"]
+        dup_msg = r"unique keys; duplicate value: \(0\.5, 1\)"
+        dups = spark.createDataFrame(
+            [(0.5, 1), (0.5, 1), (0.7, 2)], "key double, doc_id long"
+        )
+        # tied key, distinct tie-breaker: legal, ranked by doc_id
+        ties = spark.createDataFrame(
+            [(float(i // 2), i) for i in range(40)], "key double, doc_id long"
+        )
+        for per_batch in ("1", "3", "10000"):
+            spark.conf.set(batch_conf, per_batch)
+            try:
+                with pytest.raises(Exception, match=dup_msg):
+                    rank_unique(dups, keys, partitions=2).collect()
+                out = rank_unique(ties, keys, partitions=3).collect()
+            finally:
+                spark.conf.unset(batch_conf)
+            assert sorted((r["doc_id"], r["cnt_better"]) for r in out) == [
+                (i, i) for i in range(40)
+            ]
+            assert {r["n_total"] for r in out} == {40}
+
     def test_carry_on_duplicate_keys_raises(self, spark):
         """r13 (ADVICE r12 #2): carry= declares key uniqueness; a
         colliding key would silently drop rows (one output per DISTINCT
