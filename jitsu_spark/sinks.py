@@ -24,7 +24,12 @@ date at micro-batch size). A second listing finds the read partitions
 the merge emptied. On a lakehouse table format this same operation is a
 `MERGE INTO` whose file pruning does the equivalent partition-level
 rewrite; the API here is format-agnostic so swapping the physical layer
-does not change callers.
+does not change callers. A routed batch MERGEs its tables concurrently,
+as bulker loads each routed table as its own request: one thread per
+table, at most `defaultParallelism` at once, each inheriting the
+caller's local properties (the stream's job group and batch
+description). Every per-table write touches only its own path and is
+idempotent, so a failed batch is still replayed whole.
 """
 
 from __future__ import annotations
@@ -32,7 +37,9 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -192,27 +199,32 @@ class WarehouseSink:
 
         One distinct (table, date) collect over the cached routed batch
         gives both the table list (bounded by event-name cardinality) and
-        each table's date set for its MERGE window; per-table writes
-        reuse the cache, so the source is scanned once.
+        each table's date set for its MERGE window. The per-table writes
+        then run concurrently (`map_tables`), each on its own projection
+        of the cache, so the source is scanned once; the cache is released
+        only after every table's write has ended. Returns the tables in
+        routing order; a failed table's error is raised after the others
+        have finished.
         """
         df = df.withColumn(PARTITION_COL, F.to_date(F.col(timestamp_col))).cache()
         try:
             dates: dict[str | None, set] = {}
             for t, d in df.select(table_col, PARTITION_COL).distinct().collect():
                 dates.setdefault(t, set()).add(d)
-            tables = []
+
             # a null routing value is unroutable, not a crash (round-9
             # spine review finding #7): its rows go to the quarantine
             # table, so nothing is silently lost and the batch completes.
-            for t in dates:
+            def write(t: str | None) -> str:
                 part = df.where(F.col(table_col).eqNullSafe(t)).drop(table_col)
                 name = UNROUTABLE_TABLE if t is None else t
                 if deduplicate:
                     self.upsert(part, name, primary_key, timestamp_col, _batch_dates=dates[t])
                 else:
                     self.append(part, name, timestamp_col)
-                tables.append(name)
-            return tables
+                return name
+
+            return map_tables(self.spark, write, list(dates))
         finally:
             df.unpersist()
 
@@ -262,6 +274,25 @@ class WarehouseSink:
             known = set(self.read(table).columns)
             df = df.select(*[c for c in df.columns if c in known])
         return df
+
+
+def map_tables(spark: SparkSession, write, tables: list) -> list:
+    """`[write(t) for t in tables]`, with the writes running concurrently
+    on at most `defaultParallelism` threads.
+
+    Each submission gets its own `inheritable_thread_target` wrapper: the
+    wrapper clones the caller's JVM local properties once, when it is
+    made, and `SQLExecution` sets `spark.sql.execution.id` on that
+    object per query, so one clone shared by several threads would file
+    one table's jobs under another table's execution. Inheriting them at
+    all is what keeps a stream's job group (and so `query.stop()`'s
+    cancellation) on the writes. Leaving the `with` block waits for every
+    write; the first failed table's error is then raised, in table order.
+    """
+    workers = max(1, min(len(tables), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(write), t) for t in tables]
+    return [f.result() for f in futures]
 
 
 def _latest_per_key(df: DataFrame, pk: list[str], timestamp_col: str) -> DataFrame:

@@ -31,7 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sinks import DEFAULT_PRIMARY_KEY, WarehouseSink, _latest_per_key
+from .sinks import DEFAULT_PRIMARY_KEY, WarehouseSink, _latest_per_key, map_tables
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -240,7 +240,10 @@ class JdbcWarehouseSink:
         timestamp_col: str = "ts",
     ) -> list[str]:
         """Multi-table routing (bulker-destination.ts:340-385) against the
-        JDBC warehouse: one upsert/append per routed table."""
+        JDBC warehouse: one upsert/append per routed table, run concurrently
+        like the parquet sink's (`sinks.map_tables`). Each statement opens
+        its own connection and each table stages into its own
+        `<table>__stage`, so the tables share no JDBC state."""
         from pyspark.sql import functions as F
 
         df = df.cache()
@@ -255,13 +258,16 @@ class JdbcWarehouseSink:
                     f"{n} row(s) have a null routing column {table_col!r}; "
                     "the JDBC warehouse has no quarantine table"
                 )
-            for t in tables:
+
+            def write(t: str) -> str:
                 part = df.where(F.col(table_col) == t).drop(table_col)
                 if deduplicate:
                     self.upsert(part, t, primary_key, timestamp_col)
                 else:
                     self.append(part, t, primary_key)
-            return tables
+                return t
+
+            return map_tables(self.spark, write, tables)
         finally:
             df.unpersist()
 

@@ -343,3 +343,98 @@ def test_write_routed_merge_writes_one_file_per_date(spark, sink):
         assert max(ids.values()) == 1, t
     got = {r.message_id for t in tables for r in sink.read(t).collect()}
     assert got == {f"m{i}" for i in range(150)} | {"late"}
+
+
+def _routed(spark, rows):
+    return spark.createDataFrame(rows, "message_id string, ts timestamp, v string, _table string")
+
+
+def test_write_routed_jobs_inherit_callers_job_group(spark, sink):
+    """The per-table writes run on pool threads that inherit the caller's
+    local properties: a stream's job group (what `query.stop()` cancels)
+    covers every job the fan-out issues."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    rows = [(f"m{i}", _ts(f"2024-03-0{1 + i % 2}T00:00:00"), "x", f"t{i % 4}") for i in range(40)]
+    sink.write_routed(_routed(spark, rows))  # the tables exist: every MERGE reads and writes
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    grouped = set(tracker.getJobIdsForGroup("g7"))
+    sc.setJobGroup("g7", "routed batch", interruptOnCancel=True)
+    try:
+        tables = sink.write_routed(_routed(spark, rows))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert sorted(tables) == ["t0", "t1", "t2", "t3"]
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    # routing collect + 4 × (schema read, MERGE write) at least
+    assert len(set(tracker.getJobIdsForGroup("g7")) - grouped) >= 9
+
+
+def test_write_routed_failure_raises_after_other_tables(spark, sink):
+    """One table's MERGE fails (its stored parquet has conflicting types
+    for `v`, so the mergeSchema read cannot merge them): `write_routed`
+    raises, the other tables are fully written, and the routed cache is
+    released."""
+    import os
+
+    bad = os.path.join(sink.base_dir, "bad")
+    spark.createDataFrame([("b1", _ts("2024-03-01T00:00:00"), 1)], "message_id string, ts timestamp, v int") \
+        .write.parquet(os.path.join(bad, "_p_date=2024-03-01"))
+    spark.createDataFrame([("b2", _ts("2024-03-02T00:00:00"), "s")], "message_id string, ts timestamp, v string") \
+        .write.parquet(os.path.join(bad, "_p_date=2024-03-02"))
+    rows = [(f"m{i}", _ts("2024-03-02T00:00:00"), "x", ["a", "b", "c", "bad"][i % 4]) for i in range(40)]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception) as err:
+        sink.write_routed(_routed(spark, rows))
+    assert "v" in str(err.value)
+    for t in "abc":
+        got = {r.message_id for r in sink.read(t).collect()}
+        assert got == {f"m{i}" for i in range(40) if i % 4 == "abc".index(t)}, t
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_write_routed_matches_newest_wins_model(spark, sink):
+    """Randomized routed batches (redeliveries newer and older, null
+    timestamps, late keys into older dates, in-batch duplicates) against a
+    pure-Python newest-wins model: every table holds exactly the model's
+    rows, no key twice, and no `_p_date=` directory is left empty."""
+    import glob
+    import os
+    import random
+    from collections import Counter
+
+    rnd = random.Random(7)
+    tables = [f"t{i:02d}" for i in range(12)]
+    model: dict[tuple[str, str], tuple] = {}  # (table, key) -> (order, v)
+    null_used: set[str] = set()
+    seq = 0
+    keys: list[str] = []
+    for b in range(3):
+        rows = []
+        new = [f"k{b}_{i}" for i in range(60)]
+        picks = new + rnd.sample(keys, min(len(keys), 30)) + rnd.sample(new, 5)
+        for k in picks:
+            seq += 1  # a distinct second per row: no timestamp ties
+            if k not in null_used and rnd.random() < 0.1:
+                null_used.add(k)
+                ts = None
+            else:
+                day = rnd.randint(1, 3) if rnd.random() < 0.3 else 3 + b  # late keys land in older dates
+                ts = dt.datetime(2024, 3, day) + dt.timedelta(seconds=seq)
+            t = tables[int(k.split("_")[1]) % 12]
+            v = f"{k}@{seq}"
+            rows.append((k, ts, v, t))
+            order = ts or dt.datetime(1900, 1, 1)
+            if (t, k) not in model or order > model[(t, k)][0]:
+                model[(t, k)] = (order, v)
+        keys += new
+        rnd.shuffle(rows)
+        sink.write_routed(_routed(spark, rows).repartition(4))
+    for t in tables:
+        got = [(r.message_id, r.v) for r in sink.read(t).collect()]
+        assert max(Counter(k for k, _ in got).values()) == 1, t
+        assert dict(got) == {k: v for (tt, k), (_, v) in model.items() if tt == t}, t
+        for part in glob.glob(os.path.join(sink.base_dir, t, "_p_date=*")):
+            assert glob.glob(os.path.join(part, "*.parquet")), part

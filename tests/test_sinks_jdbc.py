@@ -94,6 +94,22 @@ def test_routed_write(spark, sink):
     assert sink.read("pages").count() == 1  # deduped on message_id
 
 
+def test_routed_write_merges_existing_tables_concurrently(spark, sink):
+    """Four tables created by one routed batch, then MERGEd by a second:
+    the concurrent per-table stage/MERGE/DROP statements do not collide."""
+    tables = ["t0", "t1", "t2", "t3"]
+
+    def batch(ts, tag):
+        rows = [(f"m{i}", ts, tag, tables[i % 4]) for i in range(20)]
+        return spark.createDataFrame(rows, "message_id string, ts timestamp, payload string, _table string")
+
+    assert sorted(sink.write_routed(batch(T0, "old"))) == tables
+    assert sorted(sink.write_routed(batch(T1, "new"))) == tables
+    for t in tables:
+        got = {r.message_id: r.payload for r in sink.read(t).collect()}
+        assert got == {f"m{i}": "new" for i in range(20) if i % 4 == tables.index(t)}, t
+
+
 def test_partitioned_parallel_read(spark, sink):
     rows = [(f"m{i}", T0, str(i)) for i in range(100)]
     df = spark.createDataFrame(
